@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * fixed-overhead structure of each query is visible. Optionally dumps
   * `.explain("formatted")` plans to a directory.
   *
-  * Usage: runMain graft.BenchExtra [--plans <dir> <suffix>] [query ...]
+  * Usage: runMain graft.BenchExtra [--profile] [--plans <dir> <suffix>] [query ...]
+  * (the two flags in either order)
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
   */
 object BenchExtra {
@@ -50,10 +51,12 @@ object BenchExtra {
       var prevEnd = 0L
       order.asScala.foreach { id =>
         val j = js.get(id)
-        val durMs = (j.end - j.start) / 1e6
+        // a job whose end event never arrived has no duration (never a
+        // negative one) and leaves the gap reference where it was
+        val dur = if (j.end == 0L) "       -  " else f"${(j.end - j.start) / 1e6}%8.1fms"
         val gapMs = if (prevEnd == 0L) 0.0 else (j.start - prevEnd) / 1e6
-        prevEnd = j.end
-        System.err.println(f"[job] ${j.id}%4d dur=${durMs}%8.1fms gap=${gapMs}%7.1fms ${j.desc.take(90)}")
+        if (j.end != 0L) prevEnd = j.end
+        System.err.println(f"[job] ${j.id}%4d dur=$dur gap=${gapMs}%7.1fms ${j.desc.take(90)}")
       }
     }
   }
@@ -65,9 +68,13 @@ object BenchExtra {
     var plansDir: Option[String] = None
     var plansSuffix = "before"
     var profile = false
-    if (rest.take(1) == List("--profile")) { profile = true; rest = rest.drop(1) }
-    if (rest.take(1) == List("--plans")) {
-      plansDir = Some(rest(1)); plansSuffix = rest(2); rest = rest.drop(3)
+    // leading flags, in any order
+    var flags = true
+    while (flags) rest match {
+      case "--profile" :: tail => profile = true; rest = tail
+      case "--plans" :: dir :: suffix :: tail =>
+        plansDir = Some(dir); plansSuffix = suffix; rest = tail
+      case _ => flags = false
     }
     val names = if (rest.nonEmpty) rest else SparkEntry.queries.keys.toList.sorted
     val spark = SparkSession.builder()

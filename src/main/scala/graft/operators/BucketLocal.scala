@@ -1,13 +1,13 @@
 package graft.operators
 
 import graft.model.Model
-import graft.table.{ConvBloom, FileStats, LakeTable, Snapshot}
+import graft.table.{LakeTable, Snapshot}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftbridge.ScanBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.CollectionAccumulator
 
 /** Bucket-local (zero-shuffle) table passes. The table's bucket layout means
   * every per-key operation — LWW fold, tombstone expiry, rewrite — is fully
@@ -117,7 +117,7 @@ object BucketLocal {
     (schema.fieldIndex("conv_id"), schema.fieldIndex("turn_idx"),
       schema.fieldIndex("ts"), schema.fieldIndex("seq"))
 
-  private[operators] def bucketArray(table: LakeTable, snap: Snapshot,
+  private[graft] def bucketArray(table: LakeTable, snap: Snapshot,
       buckets: Option[Set[Int]] = None): Array[Array[(String, Long)]] = {
     // sized from the SNAPSHOT, not the handle: the snapshot's manifest is
     // the authority on the bucket layout (a stale handle after a rebucket
@@ -212,12 +212,32 @@ object BucketLocal {
     }
   }
 
+  private def keyComparator(convI: Int, turnI: Int): java.util.Comparator[InternalRow] =
+    new java.util.Comparator[InternalRow] {
+      override def compare(a: InternalRow, b: InternalRow): Int = {
+        val c = a.getUTF8String(convI).compareTo(b.getUTF8String(convI))
+        if (c != 0) c else Integer.compare(a.getInt(turnI), b.getInt(turnI))
+      }
+    }
+
+  /** The shared in-task tail of every clustered rewrite (compaction's hash
+    * path, rebucket): buffer the partition and CLUSTER it by
+    * (conv_id, turn_idx). `copyRows = false` only when the input rows are
+    * already safe copies (e.g. a hash fold's map values).
+    */
+  private[operators] def clustered(rows: Iterator[InternalRow], copyRows: Boolean,
+      convI: Int, turnI: Int): Iterator[InternalRow] = {
+    val arr = rows.map(r => if (copyRows) r.copy() else r).toArray
+    java.util.Arrays.sort(arr, keyComparator(convI, turnI))
+    arr.iterator
+  }
+
   /** One bucket-local compaction pass: fold deltas (when present), drop
     * tombstones older than the watermark, CLUSTER the bucket's rows by
-    * (conv_id, turn_idx), tag rows with the bucket id (= partition id, the
-    * alignment invariant). ZERO shuffles — compaction cost is exactly
-    * read + sort-in-task + write, the property that keeps maintenance
-    * feasible at 10^10 rows.
+    * (conv_id, turn_idx). Partition i holds bucket i's rows (the alignment
+    * invariant), ready for [[graft.table.BucketWriter.writeAligned]]. ZERO
+    * shuffles — compaction cost is exactly read + sort-in-task + write, the
+    * property that keeps maintenance feasible at 10^10 rows.
     *
     * Clustering: the rewritten parquet gets tight per-row-group min/max
     * statistics on the key columns (a conversation's turns are contiguous),
@@ -228,134 +248,12 @@ object BucketLocal {
     * the SAME bound the delta fold and the COW merge already have (a bucket
     * is the rewrite unit, sized to the executor via numBuckets).
     */
-  /** Per-partition (= per-bucket) write-side stats for compaction output:
-    * key bounds + conv bloom (+ opt-in token bloom over whitespace-split
-    * `text`) + row count, reported through a CollectionAccumulator exactly
-    * like the COW merge's TaskWriteStats. Compaction rewrites are the
-    * LONG-LIVED majority of a mature table's files; without this they were
-    * stat-less (never skippable) and their row counts cost driver footer
-    * reads per maintenance pass.
-    */
-  private final class CompactStats(convI: Int, turnI: Int, textI: Int,
-      textIndex: Boolean, opI: Int, tsI: Int) {
-    private var n = 0L
-    private var nTomb = 0L
-    private var minConv: UTF8String = null
-    private var maxConv: UTF8String = null
-    private var minTurn = Int.MaxValue
-    private var maxTurn = Int.MinValue
-    private var minTs = Long.MaxValue
-    private var maxTs = Long.MinValue
-    private val convBloom = ConvBloom.empty()
-    private val tokBloom = if (textIndex) ConvBloom.empty() else null
-    private var reported = false
-
-    def observe(r: InternalRow): Unit = {
-      n += 1
-      if (!r.isNullAt(opI) &&
-        r.getUTF8String(opI).toString == Model.OpDelete) nTomb += 1
-      val c = r.getUTF8String(convI)
-      // clone on update only (rare after the first rows): the scan reuses
-      // its row buffer, so held extrema must own their bytes
-      if (minConv == null || c.compareTo(minConv) < 0) minConv = c.clone()
-      if (maxConv == null || c.compareTo(maxConv) > 0) maxConv = c.clone()
-      val t = r.getInt(turnI)
-      if (t < minTurn) minTurn = t
-      if (t > maxTurn) maxTurn = t
-      if (!r.isNullAt(tsI)) {
-        val ts = r.getLong(tsI)
-        if (ts < minTs) minTs = ts
-        if (ts > maxTs) maxTs = ts
-      }
-      ConvBloom.add(convBloom, c)
-      if (textIndex && !r.isNullAt(textI)) {
-        val toks = r.getUTF8String(textI).toString.split("\\s+")
-        var i = 0
-        while (i < toks.length) {
-          if (toks(i).nonEmpty) ConvBloom.add(tokBloom, UTF8String.fromString(toks(i)))
-          i += 1
-        }
-      }
-    }
-
-    def report(acc: CollectionAccumulator[(Int, FileStats, Long, Long)]): Unit =
-      if (n > 0 && !reported) {
-        reported = true
-        acc.add((org.apache.spark.TaskContext.getPartitionId(),
-          FileStats(minConv.toString, maxConv.toString, minTurn, maxTurn,
-            ConvBloom.seal(convBloom),
-            if (textIndex) ConvBloom.seal(tokBloom) else None,
-            if (minTs == Long.MaxValue) None else Some(minTs),
-            if (maxTs == Long.MinValue) None else Some(maxTs)), n, nTomb))
-      }
-  }
-
-  private def keyComparator(convI: Int, turnI: Int): java.util.Comparator[InternalRow] =
-    new java.util.Comparator[InternalRow] {
-      override def compare(a: InternalRow, b: InternalRow): Int = {
-        val c = a.getUTF8String(convI).compareTo(b.getUTF8String(convI))
-        if (c != 0) c else Integer.compare(a.getInt(turnI), b.getInt(turnI))
-      }
-    }
-
-  /** The shared in-task tail of every clustered rewrite (compaction's hash
-    * path, rebucket, SQL overwrite): buffer the partition, CLUSTER by
-    * (conv_id, turn_idx), observe write-side [[CompactStats]], tag rows with
-    * the bucket id (= partition id). `copyRows = false` only when the input
-    * rows are already safe copies (e.g. a hash fold's map values).
-    */
-  private def clusterStatsTag(rows: Iterator[InternalRow], copyRows: Boolean,
-      convI: Int, turnI: Int, tsI: Int, opI: Int, textI: Int, textIndex: Boolean,
-      statsAcc: Option[CollectionAccumulator[(Int, FileStats, Long, Long)]])
-      : Iterator[InternalRow] = {
-    val buf = new scala.collection.mutable.ArrayBuffer[InternalRow]
-    rows.foreach(r => buf += (if (copyRows) r.copy() else r))
-    val arr = buf.toArray
-    java.util.Arrays.sort(arr, keyComparator(convI, turnI))
-    statsAcc.foreach { acc =>
-      val st = new CompactStats(convI, turnI, textI, textIndex, opI, tsI)
-      arr.foreach(st.observe)
-      st.report(acc)
-    }
-    val bucketRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.TaskContext.getPartitionId()))
-    val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-    arr.iterator.map(r => joined(r, bucketRow): InternalRow)
-  }
-
-  /** Rebucket write support: `state` arrives already repartitioned by the
-    * NEW bucket function, so partition id == new bucket id (the same
-    * alignment every apply path uses). Each partition is clustered by key
-    * in-task (the layout compaction emits), observed through the SAME
-    * write-side stats accumulator as the COW/MOR/compaction writes — so
-    * rebucket needs no driver footer reads AND its long-lived files carry
-    * [[graft.table.FileStats]] (they previously had none and were never
-    * skippable) — and tagged with the bucket column from the partition id.
-    */
-  def clusterTagAndTrack(spark: SparkSession, state: DataFrame, schema: StructType,
-      statsAcc: CollectionAccumulator[(Int, FileStats, Long, Long)]): DataFrame = {
-    val (convI, turnI, tsI, _) = keyIdx(schema)
-    val opI = schema.fieldIndex("op")
-    val tagged = ScanBridge.toInternalRdd(state).mapPartitions { rows =>
-      // rows reuse upstream buffers → copy
-      clusterStatsTag(rows, copyRows = true, convI, turnI, tsI, opI,
-        textI = -1, textIndex = false, Some(statsAcc))
-    }
-    val outSchema = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
-    ScanBridge.internalDf(spark, tagged, outSchema)
-  }
-
   def compactRows(spark: SparkSession, table: LakeTable, snap: Snapshot,
       watermarkMicros: Long, spill: Boolean = false,
-      buckets: Option[Set[Int]] = None,
-      statsAcc: Option[CollectionAccumulator[(Int, FileStats, Long, Long)]] = None,
-      textIndex: Boolean = false): DataFrame = {
+      buckets: Option[Set[Int]] = None): RDD[InternalRow] = {
     val schema = snap.schema
     val (convI, turnI, tsI, seqI) = keyIdx(schema)
     val opI = schema.fieldIndex("op")
-    val textI = if (textIndex) schema.fieldIndex("text") else -1
     val fold = snap.morDeltas
     val deleteOp = UTF8String.fromString(Model.OpDelete)
     // a null-ts tombstone has UNKNOWN event time — it must never expire
@@ -364,29 +262,7 @@ object BucketLocal {
     def expired(r: InternalRow): Boolean =
       !r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp) &&
         !r.isNullAt(tsI) && r.getLong(tsI) < watermarkMicros
-    def tag(rows: Iterator[InternalRow]): Iterator[InternalRow] = {
-      val bucketRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](org.apache.spark.TaskContext.getPartitionId()))
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      rows.map(r => joined(r, bucketRow): InternalRow)
-    }
-    // streaming stats wrapper (spill path): observe each emitted row, report
-    // once on exhaustion — the parquet writer always drains its iterator
-    def tracked(rows: Iterator[InternalRow]): Iterator[InternalRow] =
-      statsAcc match {
-        case None => rows
-        case Some(acc) =>
-          val st = new CompactStats(convI, turnI, textI, textIndex, opI, tsI)
-          new Iterator[InternalRow] {
-            override def hasNext: Boolean = {
-              val h = rows.hasNext
-              if (!h) st.report(acc)
-              h
-            }
-            override def next(): InternalRow = { val r = rows.next(); st.observe(r); r }
-          }
-      }
-    val compacted = if (spill) {
+    if (spill) {
       // Spill-safe compaction — THE maintenance pass that must survive an
       // oversized bucket (it is how the operator shrinks one): partition-
       // local SortExec (spills) already clusters by key, so the streaming
@@ -397,11 +273,11 @@ object BucketLocal {
       ScanBridge.toInternalRdd(sortedByKeyVersion(raw)).mapPartitions { rows =>
         // un-folded rows come off the sorter's buffers too — foldWinnersSorted
         // copies its survivors; the raw (COW, key-unique) branch streams the
-        // sorted iterator straight into the write, which consumes each row
+        // sorted iterator straight into the writer, which consumes each row
         // before pulling the next, so no copy is needed there
         val resolved =
           if (fold) foldWinnersSorted(rows, convI, turnI) else rows
-        tag(tracked(resolved.filter(r => !expired(r))))
+        resolved.filter(r => !expired(r))
       }
     } else ScanBridge.bucketFilesRdd(spark, schema, bucketArray(table, snap, buckets))
       .mapPartitions { rows =>
@@ -409,12 +285,7 @@ object BucketLocal {
           if (fold) foldWinners(rows, convI, turnI, tsI, seqI) else rows
         // fold-path rows are already safe copies (map values); raw-scan rows
         // reuse the reader's buffer and must be copied to be held for the sort
-        clusterStatsTag(resolved.filter(r => !expired(r)), copyRows = !fold,
-          convI, turnI, tsI, opI, textI, textIndex, statsAcc)
+        clustered(resolved.filter(r => !expired(r)), copyRows = !fold, convI, turnI)
       }
-    val outSchema = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
-    ScanBridge.internalDf(spark, compacted, outSchema)
   }
 }

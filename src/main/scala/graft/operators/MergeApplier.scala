@@ -1,15 +1,14 @@
 package graft.operators
 
 import graft.model.Model
-import graft.table.{LakeTable, ManifestRef, Snapshot}
+import graft.table.{BucketFile, BucketWriter, LakeTable, ManifestRef, Snapshot}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ScanBridge
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.CollectionAccumulator
 
 /** The engine core: apply one micro-batch of change events to a LakeTable as
   * an exactly-once, key-partitioned MERGE.
@@ -23,12 +22,16 @@ import org.apache.spark.util.CollectionAccumulator
   * {{{
   *   batch ─ repartition(N, key) ──────────┐   partition i == bucket i
   *                                         ├─ zipPartitions: in-task LWW fold
-  *   target ─ bucket-aligned parquet scan ─┘   ─ write touched buckets ─ atomic commit(batchId)
+  *   target ─ bucket-aligned parquet scan ─┘   ─ task i writes bucket i's file
+  *                                               ─ manifest from task results ─ atomic commit(batchId)
   * }}}
   *
   * ONE exchange total (the batch's); the table side never shuffles — its
   * bucket files are read directly by the task owning that bucket
   * (ScanBridge.bucketFilesRdd), and untouched buckets' tasks open no file.
+  * The task that folds a bucket also writes it ([[graft.table.BucketWriter]]):
+  * no output committer, no driver-side listing — the commit's manifest is
+  * built from the files the tasks report back.
   *
   * Correctness properties (tested in MergeSpec/StreamSpec):
   *   - idempotent: a replayed batchId is a no-op (ledger check before work)
@@ -40,10 +43,10 @@ import org.apache.spark.util.CollectionAccumulator
   *     files read back with nulls
   *
   * Scale notes (10^10 rows, 1000 executors):
-  *   - within-batch dedup is `max_by` hash agg → map-side partial combine, so
-  *     hot conversations collapse before the shuffle (no salting needed here)
-  *   - the merge union re-shuffles only touched buckets' rows; write
-  *     amplification is bounded by (touched buckets / total buckets)
+  *   - within-batch dedup is the in-task fold of the bucket that owns the
+  *     key, so a hot conversation costs one hash-map entry, not a reducer
+  *   - only touched buckets are read and rewritten; write amplification is
+  *     bounded by (touched buckets / total buckets)
   *   - tombstones are retained for LWW and dropped by [[compact]] once below
   *     an event-time watermark
   */
@@ -57,31 +60,23 @@ object MergeApplier {
       upserts: Long,
       deletes: Long)
 
-  /** One task attempt's write-side stats, deduplicated by partition id on
-    * the driver: batch rows seen, batch deletes, rows written, and the
-    * WRITTEN rows' key bounds — which become the commit's per-file
-    * [[graft.table.FileStats]] (file skipping for point lookups) with zero
-    * added I/O: the task already had every written row in hand.
-    */
-  private final case class TaskWriteStats(pid: Int, rows: Long, dels: Long,
-      written: Long, range: Option[graft.table.FileStats])
-
   /** In-task LWW merge of one bucket: fold the batch partition's rows and
     * the bucket's stored rows into a per-key winner map under the SAME rule
     * as [[Lww.latestByKeyAgg]] — winner = max by (ts, seq), nulls lowest;
     * (ts, seq) ties keep the incumbent, which is unreachable in practice
     * because seq is unique per changelog. Emits winners (tombstones
-    * included) tagged with the bucket id = partition id.
+    * included) with the batch partition's row and delete counts.
     *
     * Memory: the map holds one row per distinct key of (batch ∪ bucket) —
     * exactly the bucket's post-merge contents, which the COW contract sizes
     * to fit an executor anyway (a bucket IS the rewrite unit). Rows are
     * copied only when stored; losers are never copied.
     */
-  private def mergeBucket(convI: Int, turnI: Int, tsI: Int, seqI: Int, opI: Int,
-      statsAcc: CollectionAccumulator[TaskWriteStats])(
-      batch: Iterator[InternalRow], target: Iterator[InternalRow]): Iterator[InternalRow] = {
-    if (!batch.hasNext) return Iterator.empty // untouched bucket: no file opened
+  private def mergeBucket(convI: Int, turnI: Int, tsI: Int, seqI: Int, opI: Int)(
+      batch: Iterator[InternalRow], target: Iterator[InternalRow])
+      : (Long, Long, Iterator[InternalRow]) = {
+    // untouched bucket: the target side is never pulled, so no file is opened
+    if (!batch.hasNext) return (0L, 0L, Iterator.empty)
     val deleteOp = UTF8String.fromString(Model.OpDelete)
     val winners = new java.util.HashMap[(UTF8String, Int), InternalRow]()
     // fold() probes with a transient key view; copies row + key only on store
@@ -100,63 +95,21 @@ object MergeApplier {
       if (!r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)) nDel += 1
       fold(r)
     }
-    val partitionId = org.apache.spark.TaskContext.getPartitionId()
     while (target.hasNext) fold(target.next())
-    // One (partitionId, rows, dels, winners) entry per task ATTEMPT; the
-    // driver collapses duplicates by partition id, so a retried / recomputed
-    // / speculated task (which re-reads the same deterministic partition and
-    // produces the identical counts) cannot inflate the metrics — unlike raw
-    // LongAccumulators, which double-count on any transformation
-    // re-execution. `winners` = rows this bucket writes, so commit lineage
-    // needs no post-write parquet footer reads on the hot path.
-    // key stats over the WRITTEN rows (winner keys are safe copies): bounds
-    // + conv bloom become the commit's per-file FileStats — free, the map
-    // is in hand
-    var minConv: UTF8String = null; var maxConv: UTF8String = null
-    var minTurn = Int.MaxValue; var maxTurn = Int.MinValue
-    val bloom = graft.table.ConvBloom.empty()
-    val keys = winners.keySet().iterator()
-    while (keys.hasNext) {
-      val (c, t) = keys.next()
-      if (minConv == null || c.compareTo(minConv) < 0) minConv = c
-      if (maxConv == null || c.compareTo(maxConv) > 0) maxConv = c
-      if (t < minTurn) minTurn = t
-      if (t > maxTurn) maxTurn = t
-      graft.table.ConvBloom.add(bloom, c)
-    }
-    // event-time bounds over the written rows (micros; null-ts rows excluded
-    // — sound, a null ts satisfies no ts predicate): time-windowed scans
-    // skip files exactly like key lookups skip on the conv bounds
-    var minTs = Long.MaxValue; var maxTs = Long.MinValue
-    val vals = winners.values().iterator()
-    while (vals.hasNext) {
-      val r = vals.next()
-      if (!r.isNullAt(tsI)) {
-        val ts = r.getLong(tsI)
-        if (ts < minTs) minTs = ts
-        if (ts > maxTs) maxTs = ts
-      }
-    }
-    val tsLo = if (minTs == Long.MaxValue) None else Some(minTs)
-    val tsHi = if (maxTs == Long.MinValue) None else Some(maxTs)
-    val range = if (winners.isEmpty) None
-      else Some(graft.table.FileStats(minConv.toString, maxConv.toString, minTurn, maxTurn,
-        graft.table.ConvBloom.seal(bloom), None, tsLo, tsHi))
-    statsAcc.add(TaskWriteStats(partitionId, nRows, nDel, winners.size.toLong, range))
-    val bucketRow = new GenericInternalRow(Array[Any](partitionId))
-    val joined = new JoinedRow
     import scala.jdk.CollectionConverters._
-    winners.values().iterator().asScala.map(r => joined(r, bucketRow))
+    (nRows, nDel, winners.values().iterator().asScala)
   }
 
   private def deleteDir(p: java.nio.file.Path): Unit =
     org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
 
-  /** Test seam: runs once per apply/compact ATTEMPT, after the data files are
-    * staged but before the first CAS try — i.e. inside the race window.
-    * Specs inject a concurrent winner here to exercise every conflict path
-    * deterministically (rebase, re-run, split-brain skip, compaction yield);
-    * the thread-race stress test covers the same paths nondeterministically.
+  /** Test seam: runs once per apply/compact ATTEMPT, after the tasks have
+    * written the data files but before the manifest is built and the first
+    * CAS try — i.e. inside the race window. Specs inject a concurrent winner
+    * here to exercise every conflict path deterministically (rebase, re-run,
+    * split-brain skip, compaction yield), or drop a stray file into the
+    * attempt directory to pin that manifests come from task results; the
+    * thread-race stress test covers the conflict paths nondeterministically.
     * Args: (writerId, batchId). No-op in production.
     */
   private[graft] var beforePublish: (String, Long) => Unit = (_, _) => ()
@@ -250,117 +203,73 @@ object MergeApplier {
     val outDir = table.attemptDir(version, writerId, batchId)
     val keyCols = Model.KeyCols.map(col)
 
-    // Shuffle-alignment trick: `bucket = pmod(hash(conv_id, turn_idx), N)`
-    // uses the SAME murmur3 as Spark's hashpartitioning, so an explicit
-    // repartition(N, key) (a) satisfies the LWW groupBy's clustering
-    // requirement -- Catalyst inserts NO second exchange for the agg -- and
-    // (b) leaves every output partition holding exactly one bucket, so the
-    // bucketed write needs no further shuffle. One exchange per pass, total.
-    def lwwByBucket(df: DataFrame): DataFrame =
-      Lww.latestByKeyAgg(df.repartition(table.numBuckets, keyCols: _*))
-
-    var batchRows = 0L
-    var nDeletes = 0L
-    var touchedCount = 0
-    var statsWinners: Map[Int, Long] = Map.empty
-    var keyRanges: Map[Int, graft.table.FileStats] = Map.empty
-
-    val coldObs = new org.apache.spark.sql.Observation("cold-stats")
-    snap match {
-      case None =>
-        // Cold start: no target to merge -- single pass, no persist, no
-        // probe; stats piggyback on the write via observe() (zero extra jobs
-        // -- an extra post-write scan was pure serial overhead in the
-        // measured replay).
-        lwwByBucket(aligned)
-          .observe(coldObs,
-            count(when(col("op") === Model.OpDelete, 1)).as("dels"))
-          .withColumn("bucket", table.bucketCol)
-          .write.mode("overwrite") // overwrite self-cleans a crashed attempt
-          .partitionBy("bucket")
-          .parquet(outDir.toString)
-      case Some(s) =>
-        // BUCKET-LOCAL MERGE — one job, one exchange (the batch's), ZERO
-        // table-side shuffle, no probe job:
-        //
-        //   batch ─ repartition(N, key) ──┐ partition i == bucket i (same
-        //                                 ├─ zipPartitions: in-task LWW fold
-        //   target ─ bucket-aligned scan ─┘ (bucket i's files, read in task i)
-        //
-        // The target scan is ScanBridge.bucketFilesRdd: partition i reads
-        // ONLY bucket i's data files through Spark's parquet reader function
-        // (schema clipping = additive-evolution nulls), lazily — a partition
-        // whose batch side is empty opens no file, which is the old probe's
-        // file pruning for free, decided per task instead of via a separate
-        // driver-side probe job. The in-task fold applies the same
-        // associative (ts, seq)-max rule as Lww.latestByKeyAgg over a
-        // hash map keyed by (conv_id, turn_idx); target buckets are already
-        // key-unique in steady state (and MOR deltas fold correctly because
-        // the rule is associative). Tombstones participate and are RETAINED,
-        // so a later stale insert still loses.
-        //
-        // Alignment invariant (pinned by MergeSpec "partition id equals
-        // bucket id"): repartition's HashPartitioning uses the same murmur3
-        // (seed 42) as the table's bucketCol, so partition i holds exactly
-        // bucket i's batch rows and the in-task bucket tag is the partition
-        // id. Stats ride on a per-partition accumulator deduplicated by
-        // partition id on the driver — exact even under task retry, stage
-        // recompute, or speculation (a re-executed task re-emits the same
-        // deterministic counts, which collapse).
-        val statsAcc = spark.sparkContext
-          .collectionAccumulator[TaskWriteStats]("graft.batchStats")
-        val batchRdd = ScanBridge.toInternalRdd(
-          aligned.repartition(table.numBuckets, keyCols: _*))
-        val targetRdd = ScanBridge.bucketFilesRdd(spark, mergedSchema,
-          BucketLocal.bucketArray(table, s))
-        val tsI = mergedSchema.fieldIndex("ts")
-        val seqI = mergedSchema.fieldIndex("seq")
-        val opI = mergedSchema.fieldIndex("op")
-        val convI = mergedSchema.fieldIndex("conv_id")
-        val turnI = mergedSchema.fieldIndex("turn_idx")
-        val merged = batchRdd.zipPartitions(targetRdd, preservesPartitioning = false)(
-          mergeBucket(convI, turnI, tsI, seqI, opI, statsAcc))
-        val outSchema = StructType(mergedSchema.fields :+
-          StructField("bucket", org.apache.spark.sql.types.IntegerType, nullable = false))
-        ScanBridge.internalDf(spark, merged, outSchema)
-          .write.mode("overwrite")
-          .partitionBy("bucket")
-          .parquet(outDir.toString)
-        import scala.jdk.CollectionConverters._
-        val perPartition = statsAcc.value.asScala.groupBy(_.pid).values.map(_.head)
-        batchRows = perPartition.map(_.rows).sum
-        nDeletes = perPartition.map(_.dels).sum
-        statsWinners = perPartition.map(s => s.pid -> s.written).toMap
-        keyRanges = perPartition.flatMap(s => s.range.map(r => s.pid -> r)).toMap
-        if (batchRows == 0) {
-          // Idle trigger: nothing arrived. Emptiness detection piggybacks on
-          // the merge job itself — an empty batch side makes every mergeBucket
-          // task a no-op (no table file opened, no row written), so the job
-          // costs one empty task wave. The former up-front `batch.isEmpty`
-          // probe spent a separate Spark job on EVERY batch to spare only the
-          // idle ones. Drop the empty output dir rather than commit an orphan
-          // version; replay of an empty batch is trivially idempotent.
-          deleteDir(outDir)
-          return Some(ApplyResult(skipped = false, s.version, 0, 0, 0, 0))
-        }
+    // BUCKET-LOCAL MERGE — one job, one exchange (the batch's), ZERO
+    // table-side shuffle, no probe job:
+    //
+    //   batch ─ repartition(N, key) ──┐ partition i == bucket i (same
+    //                                 ├─ zipPartitions: in-task LWW fold
+    //   target ─ bucket-aligned scan ─┘ (bucket i's files, read in task i)
+    //
+    // The target scan is ScanBridge.bucketFilesRdd: partition i reads ONLY
+    // bucket i's data files through Spark's parquet reader function (schema
+    // clipping = additive-evolution nulls), lazily — a partition whose batch
+    // side is empty opens no file, which is the old probe's file pruning for
+    // free, decided per task instead of via a separate driver-side probe
+    // job. The in-task fold applies the same associative (ts, seq)-max rule
+    // as Lww.latestByKeyAgg over a hash map keyed by (conv_id, turn_idx);
+    // target buckets are already key-unique in steady state (and MOR deltas
+    // fold correctly because the rule is associative). Tombstones
+    // participate and are RETAINED, so a later stale insert still loses.
+    // Cold start is the same pass over an empty target: the fold IS the
+    // replay's global LWW.
+    //
+    // Alignment invariant (pinned by MergeSpec "partition id equals bucket
+    // id"): `bucket = pmod(hash(conv_id, turn_idx), N)` uses the SAME murmur3
+    // (seed 42) as Spark's hashpartitioning, so after repartition(N, key)
+    // partition i holds exactly bucket i's batch rows and task i writes
+    // bucket i's file. Counts and stats come back with the collected task
+    // results: exactly one per partition, whatever the retries, recomputes
+    // or speculation.
+    val batchRdd = ScanBridge.toInternalRdd(
+      aligned.repartition(table.numBuckets, keyCols: _*))
+    val targetRdd = ScanBridge.bucketFilesRdd(spark, mergedSchema,
+      snap.map(BucketLocal.bucketArray(table, _))
+        .getOrElse(Array.fill(table.numBuckets)(Array.empty[(String, Long)])))
+    val (convI, turnI, tsI, seqI) = BucketLocal.keyIdx(mergedSchema)
+    val opI = mergedSchema.fieldIndex("op")
+    val writer = BucketWriter(spark, mergedSchema, outDir)
+    val perPartition = batchRdd.zipPartitions(targetRdd, preservesPartitioning = false) {
+      (batch, target) =>
+        val (rows, dels, winners) = mergeBucket(convI, turnI, tsI, seqI, opI)(batch, target)
+        Iterator((rows, dels, writer.write(TaskContext.getPartitionId(), winners)))
+    }.collect()
+    val written = perPartition.toSeq.flatMap(_._3)
+    if (written.isEmpty) {
+      // Idle trigger (or an empty first batch): nothing arrived. Emptiness
+      // detection piggybacks on the merge job itself — an empty batch side
+      // makes every mergeBucket task a no-op (no table file opened, no row
+      // written), so the job costs one empty task wave. The former up-front
+      // `batch.isEmpty` probe spent a separate Spark job on EVERY batch to
+      // spare only the idle ones. Drop the empty output dir rather than
+      // commit an orphan version; replay of an empty batch is trivially
+      // idempotent.
+      deleteDir(outDir)
+      return Some(ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0))
     }
+    // a hot merge reports the batch's rows; a cold start the replay's
+    // surviving rows (its batch is the whole changelog)
+    val (batchRows, nDeletes) =
+      if (snap.isEmpty) (written.map(_.rows).sum, written.map(_.tombstones).sum)
+      else (perPartition.map(_._1).sum, perPartition.map(_._2).sum)
+    beforePublish(writerId, batchId)
     val tMeta = System.nanoTime()
 
-    // key bounds from the merge fold ride into the manifest (file skipping
-    // for point lookups); cold start has no per-partition stats — its base
-    // files carry no bounds, which only disables skipping, never correctness
-    val newBucketFiles = table.attachStats(table.listBucketFiles(outDir), keyRanges)
-    if (snap.isEmpty && newBucketFiles.isEmpty) {
-      // Empty FIRST batch on a cold table: same no-orphan-version contract as
-      // the hot path's idle-trigger handling — commit nothing.
-      deleteDir(outDir)
-      return Some(ApplyResult(skipped = false, 0, 0, 0, 0, 0))
-    }
-    if (snap.nonEmpty) {
-      // every touched bucket emits >=1 winner (tombstones retained), so the
-      // written bucket set IS the touched set
-      touchedCount = newBucketFiles.size
-    }
+    // the tasks' files, with the key bounds + blooms their writers tracked
+    // (file skipping for point lookups)
+    val newBucketFiles = BucketFile.entries(written)
+    // every touched bucket emits >=1 winner (tombstones retained), so the
+    // written bucket set IS the touched set
+    val touchedCount = newBucketFiles.size
     // Manifest-list commit: ONE new manifest file for the touched buckets;
     // prior refs keep their (untouched) buckets via mask subtraction — no
     // file list is ever rewritten, so commit metadata I/O is O(touched),
@@ -374,18 +283,9 @@ object MergeApplier {
       .map(m => m.copy(buckets = m.buckets -- mine))
       .filter(_.buckets.nonEmpty) :+ myRef
     val prevRows = snap.map(_.bucketRows).getOrElse(Map.empty)
-    // Hot path: per-bucket written rows are the merge fold's winner counts —
-    // no re-opening of just-written parquet footers per micro-batch (driver
-    // I/O off the tail's critical path). Cold start reads footers once.
-    val newRows = if (snap.nonEmpty) statsWinners
-      else table.footerRowCounts(newBucketFiles)
-    if (snap.isEmpty) {
-      // cold-start stats: totals from footers (free); tombstones from the
-      // observed write metrics
-      batchRows = newRows.values.sum
-      touchedCount = newBucketFiles.size
-      nDeletes = coldObs.get("dels").asInstanceOf[Long]
-    }
+    // per-bucket written rows as the writers counted them — no re-opening
+    // of just-written parquet footers (driver I/O off the critical path)
+    val newRows = BucketFile.rows(written)
 
     def metricsFor(extra: Map[String, Long]) = Map(
       "batchRows" -> batchRows,
@@ -432,7 +332,6 @@ object MergeApplier {
     // change to our buckets (COW rewrite, MOR delta, compaction, resize)
     // means our in-task fold is stale: drop the attempt's files and re-run
     // the merge (None → applyBatch loops).
-    beforePublish(writerId, batchId)
     while (true) {
       try {
         table.commit(cand)
@@ -501,103 +400,31 @@ object MergeApplier {
     val version = snap.map(_.version).getOrElse(0L) + 1
     val outDir = table.attemptDir(version, writerId, batchId)
     val keyCols = Model.KeyCols.map(col)
-    // Per-bucket lineage rides a per-partition accumulator (the COW
-    // winner-count pattern): partition id == bucket id by the alignment
-    // invariant, so the delta write needs neither a bucket-hash column per
-    // row nor post-write parquet footer re-opens on the driver — the footer
-    // reads were per-micro-batch driver I/O on the write-optimized tail's
-    // critical path. One (pid, rows, dels) entry per task ATTEMPT; the
-    // driver collapses duplicates by partition id (exact under retry /
-    // speculation, like the COW stats).
-    val statsAcc = spark.sparkContext
-      .collectionAccumulator[TaskWriteStats]("graft.morStats")
-    val opI = mergedSchema.fieldIndex("op")
-    val convI = mergedSchema.fieldIndex("conv_id")
-    val turnI = mergedSchema.fieldIndex("turn_idx")
-    val tsI = mergedSchema.fieldIndex("ts")
-    val deltaRdd = ScanBridge.toInternalRdd(
-        aligned.repartition(table.numBuckets, keyCols: _*))
-      .mapPartitions { it =>
-        new Iterator[InternalRow] {
-          private val pid = org.apache.spark.TaskContext.getPartitionId()
-          private val deleteOp = UTF8String.fromString(Model.OpDelete)
-          private val bucketRow = new GenericInternalRow(Array[Any](pid))
-          private val joined = new JoinedRow
-          private var nRows = 0L
-          private var nDel = 0L
-          // key stats of the delta file as it streams through — the
-          // row's UTF8String points into a reused buffer, so min/max are
-          // CLONED on update (rare after the first few rows); the bloom
-          // hashes the buffer in place (no copies, 4 murmur probes/row)
-          private var minConv: UTF8String = null
-          private var maxConv: UTF8String = null
-          private var minTurn = Int.MaxValue
-          private var maxTurn = Int.MinValue
-          private var minTs = Long.MaxValue
-          private var maxTs = Long.MinValue
-          private val bloom = graft.table.ConvBloom.empty()
-          private var reported = false
-          override def hasNext: Boolean = {
-            val h = it.hasNext
-            if (!h && !reported) {
-              reported = true
-              val range = if (nRows == 0) None
-                else Some(graft.table.FileStats(minConv.toString, maxConv.toString,
-                  minTurn, maxTurn, graft.table.ConvBloom.seal(bloom), None,
-                  if (minTs == Long.MaxValue) None else Some(minTs),
-                  if (maxTs == Long.MinValue) None else Some(maxTs)))
-              statsAcc.add(TaskWriteStats(pid, nRows, nDel, nRows, range))
-            }
-            h
-          }
-          override def next(): InternalRow = {
-            val r = it.next()
-            nRows += 1
-            if (!r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)) nDel += 1
-            val c = r.getUTF8String(convI)
-            if (minConv == null || c.compareTo(minConv) < 0) minConv = c.clone()
-            if (maxConv == null || c.compareTo(maxConv) > 0) maxConv = c.clone()
-            graft.table.ConvBloom.add(bloom, c)
-            val t = r.getInt(turnI)
-            if (t < minTurn) minTurn = t
-            if (t > maxTurn) maxTurn = t
-            if (!r.isNullAt(tsI)) {
-              val ts = r.getLong(tsI)
-              if (ts < minTs) minTs = ts
-              if (ts > maxTs) maxTs = ts
-            }
-            joined(r, bucketRow)
-          }
-        }
-      }
-    val outSchema = StructType(mergedSchema.fields :+
-      StructField("bucket", org.apache.spark.sql.types.IntegerType, nullable = false))
-    ScanBridge.internalDf(spark, deltaRdd, outSchema)
-      .write.mode("overwrite")
-      .partitionBy("bucket")
-      .parquet(outDir.toString)
-    import scala.jdk.CollectionConverters._
-    val perPartition = statsAcc.value.asScala.groupBy(_.pid).values.map(_.head)
-    val batchRows = perPartition.map(_.rows).sum
-    val nDeletes = perPartition.map(_.dels).sum
+    // Task i appends bucket i's delta file (partition id == bucket id by the
+    // alignment invariant): no bucket-hash column per row, and row, delete
+    // and key stats come back with the files — no driver listing, no
+    // post-write footer reads on the write-optimized tail's critical path.
+    val written = BucketWriter.writeAligned(spark,
+      ScanBridge.toInternalRdd(aligned.repartition(table.numBuckets, keyCols: _*)),
+      mergedSchema, outDir)
+    val batchRows = written.map(_.rows).sum
+    val nDeletes = written.map(_.tombstones).sum
     if (batchRows == 0) {
       // same no-orphan contract as the COW idle path: drop the empty dir
       deleteDir(outDir)
       return ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0)
     }
+    beforePublish(writerId, batchId)
     val tMeta = System.nanoTime()
-    // delta files carry their key bounds + conv bloom (from the same
-    // accumulator pass) — the skip input that keeps point lookups
-    // O(files holding the key) on a delta-deep tail
-    val keyRanges = perPartition.flatMap(s => s.range.map(r => s.pid -> r)).toMap
-    val newBucketFiles = table.attachStats(table.listBucketFiles(outDir), keyRanges)
+    // delta files carry their key bounds + conv bloom — the skip input that
+    // keeps point lookups O(files holding the key) on a delta-deep tail
+    val newBucketFiles = BucketFile.entries(written)
     val myRef = ManifestRef(table.writeManifest(version, newBucketFiles),
       newBucketFiles.keySet, delta = true)
     val prevRows = snap.map(_.bucketRows).getOrElse(Map.empty)
     // bucketRows counts STORED rows (incl. superseded versions until
-    // compact); per-bucket counts come from the write-side accumulator — no
-    // footer reads on the hot path
-    val newRows = perPartition.filter(_.rows > 0).map(s => s.pid -> s.rows).toMap
+    // compact); per-bucket counts come from the writers — no footer reads
+    val newRows = BucketFile.rows(written)
     def rowsOn(base: Map[Int, Long]) = (base.keySet ++ newBucketFiles.keySet).map { b =>
       b -> (base.getOrElse(b, 0L) + newRows.getOrElse(b, 0L))
     }.toMap
@@ -629,7 +456,6 @@ object MergeApplier {
     // tombstone our delta's late stale insert would have lost to; the
     // watermark contract — no in-flight source older than the watermark —
     // already forbids that input, exactly as in the sequential schedule.)
-    beforePublish(writerId, batchId)
     while (true) {
       try {
         table.commit(cand)
@@ -662,8 +488,9 @@ object MergeApplier {
   }
 
   /** Cold start (§3.1): single-pass full replay — read the whole changelog,
-    * one global LWW, write every bucket, one commit. Replaces the reference's
-    * two-pass detect-last-update + convert-winners workflow
+    * one global LWW (the bucket-local fold over an empty table), write every
+    * bucket, one commit. Replaces the reference's two-pass
+    * detect-last-update + convert-winners workflow
     * (full-etl.asl.json:474-543) with one shuffle.
     */
   def replayFull(spark: SparkSession, table: LakeTable, changelog: DataFrame,
@@ -741,22 +568,17 @@ object MergeApplier {
       else table.readRaw(spark)
     val keyCols = Model.KeyCols.map(col)
     // same alignment trick as the merge: repartition(newN, key) partitions
-    // equal the NEW bucket function, so the partitioned write needs no
-    // second exchange. Row counts + FileStats come from the SAME write-side
-    // accumulator lineage as every other write path (no driver footer
-    // reads), deduplicated by partition id against task retries.
-    val statsAcc = spark.sparkContext
-      .collectionAccumulator[(Int, graft.table.FileStats, Long, Long)]("rebucketStats")
-    val aligned = Model.alignToSchema(state, snap.schema)
-    BucketLocal.clusterTagAndTrack(spark,
-        aligned.repartition(newNumBuckets, keyCols: _*), snap.schema, statsAcc)
-      .write.mode("overwrite").partitionBy("bucket").parquet(outDir.toString)
-    val perBucket = {
-      import scala.jdk.CollectionConverters._
-      statsAcc.value.asScala.groupBy(_._1).map(_._2.head)
-    }
-    val newFiles = resized.attachStats(resized.listBucketFiles(outDir),
-      perBucket.map(s => s._1 -> s._2).toMap)
+    // equal the NEW bucket function, so task i writes new bucket i with no
+    // second exchange — clustered by key in-task (the layout compaction
+    // emits), with row counts + FileStats from the writers like every other
+    // write path (no driver footer reads)
+    val (convI, turnI, _, _) = BucketLocal.keyIdx(snap.schema)
+    val written = BucketWriter.writeAligned(spark,
+      ScanBridge.toInternalRdd(Model.alignToSchema(state, snap.schema)
+        .repartition(newNumBuckets, keyCols: _*))
+        .mapPartitions(rows => BucketLocal.clustered(rows, copyRows = true, convI, turnI)),
+      snap.schema, outDir)
+    val newFiles = BucketFile.entries(written)
     resized.commit(Snapshot(
       version = version,
       schemaJson = snap.schemaJson,
@@ -764,7 +586,7 @@ object MergeApplier {
       manifests = Seq(ManifestRef(resized.writeManifest(version, newFiles),
         newFiles.keySet, delta = false)),
       committed = snap.committed,
-      bucketRows = perBucket.map(s => s._1 -> s._3).toMap,
+      bucketRows = BucketFile.rows(written),
       metrics = Map("rebucketedFrom" -> snap.numBuckets.toLong),
       parentVersion = snap.version,
       morDeltas = false))
@@ -805,22 +627,15 @@ object MergeApplier {
       // compaction is exactly how the operator SHRINKS such a bucket, so it
       // is the one pass that must survive it
       val spill = table.maxBucketBytes(snap, sel) > table.spillFoldBytes
-      // write-side stats: compaction files get key bounds + conv bloom
-      // (+ the opt-in token bloom) and their row counts from the SAME task
-      // accumulator — no stat-less long-lived files, no driver footer reads
-      val statsAcc = spark.sparkContext
-        .collectionAccumulator[(Int, graft.table.FileStats, Long, Long)]("compactStats")
-      BucketLocal.compactRows(spark, table, snap, watermarkMicros, spill, sel,
-          Some(statsAcc), textIndex)
-        .write.mode("overwrite").partitionBy("bucket").parquet(outDir.toString)
-      val perBucket = {
-        import scala.jdk.CollectionConverters._
-        statsAcc.value.asScala.groupBy(_._1).map(_._2.head)
-      }
-      val newFiles = table.attachStats(table.listBucketFiles(outDir),
-        perBucket.map(s => s._1 -> s._2).toMap)
-      val rows = perBucket.map(s => s._1 -> s._3).toMap
+      // compaction files carry key bounds + conv bloom (+ the opt-in token
+      // bloom) and their row counts from the writers — no stat-less
+      // long-lived files, no driver footer reads
+      val written = BucketWriter.writeAligned(spark,
+        BucketLocal.compactRows(spark, table, snap, watermarkMicros, spill, sel),
+        snap.schema, outDir, textIndex)
       beforePublish("compact", snap.version)
+      val newFiles = BucketFile.entries(written)
+      val rows = BucketFile.rows(written)
       try {
         val cand = sel match {
           case None =>
@@ -828,8 +643,8 @@ object MergeApplier {
             // manifest — the bound on manifest-list growth (one delta ref
             // per MOR commit between compactions).
             // A FULL compaction knows the whole table's retained tombstone
-            // count exactly (every live file was rewritten through the
-            // stats pass) — recorded so metadata-only COUNT(*) pushdown can
+            // count exactly (every live file was rewritten by a writer that
+            // counts tombstones) — recorded so metadata-only COUNT(*) pushdown can
             // answer live-row counts without touching a data file. Partial
             // passes can't know the un-rewritten buckets' tombstones, so
             // they don't record it (absent = unknown = no pushdown).
@@ -838,7 +653,7 @@ object MergeApplier {
                 newFiles.keySet, delta = false)),
               snap.committed, rows,
               Map("compactedRows" -> rows.values.sum,
-                "tombstoneRows" -> perBucket.map(_._4).sum), snap.version,
+                "tombstoneRows" -> written.map(_.tombstones).sum), snap.version,
               morDeltas = false)
           case Some(t) =>
             // Partial: mask the targets out of every prior ref, append one

@@ -8,8 +8,7 @@ import org.apache.spark.sql.connector.distributions.{Distribution, Distributions
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.WriteBridge
+import org.apache.spark.sql.graftbridge.ScanBridge
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     table's bucket transform, so Spark shuffles the replacement rows ONCE
   *     and each bucket's rows arrive at a single task; tasks stream rows
   *     into per-bucket parquet files through Spark's own writer
-  *     ([[WriteBridge]]) — the driver never touches data.
+  *     ([[BucketWriter]]) — the driver never touches data.
   *   - COMMIT is O(touched) metadata: scanned buckets' old files are masked
   *     out of the manifest list and the new files take their place; rows the
   *     statement produced for UNSCANNED buckets (e.g. NOT-MATCHED inserts
@@ -118,37 +117,36 @@ private final class LakeReplaceDataWrite(
   private val outDir = table.attemptDir(snap.version + 1, "sql-rlo", 0L)
 
   override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory = {
-    java.nio.file.Files.createDirectories(outDir)
-    new LakeReplaceWriterFactory(
-      WriteBridge.parquetWriterFactory(SparkSession.active, snap.schema),
-      info.schema(), snap.schema, snap.numBuckets, outDir.toString)
+    new LakeReplaceWriterFactory(BucketWriter(SparkSession.active, snap.schema, outDir),
+      info.schema(), snap.schema, snap.numBuckets)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val entries = messages.flatMap(_.asInstanceOf[LakeReplaceMessage].files)
-    val newFiles: Map[Int, Seq[FileEntry]] = entries.groupBy(_.bucket)
-      .view.mapValues(_.map(e => FileEntry(e.path, e.bytes, e.stats))
-        .toSeq.sortBy(_.path)).toMap
-    val newRows: Map[Int, Long] = entries.groupBy(_.bucket)
-      .view.mapValues(_.map(_.rows).sum).toMap
+    val entries = messages.toSeq.flatMap(_.asInstanceOf[LakeReplaceMessage].files)
+    val newFiles = BucketFile.entries(entries)
+    val newRows = BucketFile.rows(entries)
     // the groups this output REPLACES = what the target scan actually read
     // (a never-planned scan means Spark read nothing — replace nothing)
     val replaced: Set[Int] = op.scannedBuckets.getOrElse(Set.empty)
     val baseFiles = newFiles.filter { case (b, _) => replaced.contains(b) }
     val deltaFiles = newFiles.filter { case (b, _) => !replaced.contains(b) }
 
-    // preserve the replaced buckets' CDC tombstones as a delta (see class doc)
-    val tombFiles: Map[Int, Seq[FileEntry]] =
-      if (replaced.isEmpty) Map.empty
+    // preserve the replaced buckets' CDC tombstones as a delta (see class
+    // doc): task i re-reads replaced bucket i's files and writes its
+    // tombstones; the other buckets' tasks open no file
+    val tombWritten: Seq[BucketFile] =
+      if (replaced.isEmpty) Seq.empty
       else {
-        val tombDir = outDir.resolve("tombstones")
-        table.readRaw(spark, Some(replaced), asOfVersion = Some(snap.version))
-          .filter(col("op") === Model.OpDelete)
-          .withColumn("bucket", table.bucketCol)
-          .write.mode("overwrite").partitionBy("bucket").parquet(tombDir.toString)
-        table.listBucketFiles(tombDir)
+        val opI = snap.schema.fieldIndex("op")
+        val deleteOp = UTF8String.fromString(Model.OpDelete)
+        BucketWriter.writeAligned(spark,
+          ScanBridge.bucketFilesRdd(spark, snap.schema,
+              graft.operators.BucketLocal.bucketArray(table, snap, Some(replaced)))
+            .filter(r => !r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)),
+          snap.schema, outDir.resolve("tombstones"))
       }
+    val tombFiles = BucketFile.entries(tombWritten)
 
     if (replaced.isEmpty && newFiles.isEmpty) return // no groups, no rows: no-op
 
@@ -163,10 +161,7 @@ private final class LakeReplaceDataWrite(
       base ++ tomb ++ extra
     }
     val writerId = Option(info.options().get("writerId")).getOrElse("sql-rlo")
-    // one parallel pass sharing one Hadoop Configuration — a per-bucket
-    // footerRowCount call rebuilds the ~20 ms Configuration per bucket and
-    // turns a wide MERGE's commit into seconds of serial driver time
-    val tombRows = table.footerRowCounts(tombFiles)
+    val tombRows = BucketFile.rows(tombWritten)
 
     def candidate(cur: Snapshot, rebasedFrom: Option[Long]): Snapshot = {
       val mine = refsFor(cur.version + 1)
@@ -224,30 +219,17 @@ private final class LakeReplaceDataWrite(
     org.apache.commons.io.FileUtils.deleteDirectory(outDir.toFile)
 }
 
-/** One task-written data file: bucket, path, bytes, rows, and the rows'
-  * key bounds (tracked as the rows streamed through the writer — zero extra
-  * I/O; becomes the manifest's [[FileStats]] for file skipping).
-  */
-private final case class ReplaceFile(bucket: Int, path: String, bytes: Long,
-    rows: Long, stats: Option[FileStats])
-
 private final case class LakeReplaceMessage(
-    files: Seq[ReplaceFile]) extends WriterCommitMessage
+    files: Seq[BucketFile]) extends WriterCommitMessage
 
-/** Per-task writer: routes each replacement row to its bucket's parquet file
-  * (same murmur3(seed 42) + pmod as every other engine path), appending the
-  * internal `op = insert` column the SQL surface hides.
-  */
 private final class LakeReplaceWriterFactory(
-    writers: WriteBridge.TaskWriterFactory,
+    writer: BucketWriter,
     inputSchema: StructType,
     tableSchema: StructType,
-    numBuckets: Int,
-    outDir: String) extends DataWriterFactory {
+    numBuckets: Int) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new LakeBucketDataWriter(writers, inputSchema, tableSchema, numBuckets,
-      outDir, partitionId, taskId)
+    new LakeBucketDataWriter(writer, inputSchema, tableSchema, numBuckets)
 }
 
 /** Per-task bucket-routing parquet writer, shared by the row-level
@@ -256,13 +238,10 @@ private final class LakeReplaceWriterFactory(
   * path), appending the internal `op = insert` column the SQL surface hides.
   */
 private[table] final class LakeBucketDataWriter(
-    writers: WriteBridge.TaskWriterFactory,
+    writer: BucketWriter,
     inputSchema: StructType,
     tableSchema: StructType,
-    numBuckets: Int,
-    outDir: String,
-    partitionId: Int,
-    taskId: Long) extends DataWriter[InternalRow] {
+    numBuckets: Int) extends DataWriter[InternalRow] {
 
   // Row-layout protocol: with no metadata projection, Spark's
   // ReplaceDataExec.writingTask falls back to the plain
@@ -292,47 +271,9 @@ private[table] final class LakeBucketDataWriter(
       })
     hash = Murmur3Hash(Seq(ref("conv_id"), ref("turn_idx")), 42)
   }
-  /** Per-open-file write stats: row count + key bounds of the rows written
-    * so far. Bounds track the PROJECTED (table-schema) row; its UTF8Strings
-    * point into the projection's reused buffer, so min/max are cloned on
-    * update (rare after the first rows).
-    */
-  private final class FileAcc(val w: org.apache.spark.sql.execution.datasources.OutputWriter,
-      convI: Int, turnI: Int, tsI: Int) {
-    var rows = 0L
-    private var minConv: UTF8String = null
-    private var maxConv: UTF8String = null
-    private var minTurn = Int.MaxValue
-    private var maxTurn = Int.MinValue
-    private var minTs = Long.MaxValue
-    private var maxTs = Long.MinValue
-    private val bloom = ConvBloom.empty()
-    def track(p: InternalRow): Unit = {
-      rows += 1
-      val c = p.getUTF8String(convI)
-      if (minConv == null || c.compareTo(minConv) < 0) minConv = c.clone()
-      if (maxConv == null || c.compareTo(maxConv) > 0) maxConv = c.clone()
-      ConvBloom.add(bloom, c)
-      val t = p.getInt(turnI)
-      if (t < minTurn) minTurn = t
-      if (t > maxTurn) maxTurn = t
-      if (!p.isNullAt(tsI)) {
-        val ts = p.getLong(tsI)
-        if (ts < minTs) minTs = ts
-        if (ts > maxTs) maxTs = ts
-      }
-    }
-    def range: Option[FileStats] =
-      if (rows == 0) None
-      else Some(FileStats(minConv.toString, maxConv.toString, minTurn, maxTurn,
-        ConvBloom.seal(bloom), None,
-        if (minTs == Long.MaxValue) None else Some(minTs),
-        if (maxTs == Long.MinValue) None else Some(maxTs)))
-  }
-  private lazy val tConvI = tableSchema.fieldIndex("conv_id")
-  private lazy val tTurnI = tableSchema.fieldIndex("turn_idx")
-  private lazy val tTsI = tableSchema.fieldIndex("ts")
-  private val open = scala.collection.mutable.Map.empty[Int, FileAcc]
+  // one open file per bucket this task has seen; stats are tracked over the
+  // PROJECTED (table-schema) rows as they stream into the file
+  private val open = scala.collection.mutable.Map.empty[Int, BucketWriter.OpenFile]
 
   /** Metadata-projection path (the row-level op's normal one): `meta`
     * carries the copied row's `_bucket`; inserted rows have no source group
@@ -354,35 +295,17 @@ private[table] final class LakeBucketDataWriter(
     ((h % numBuckets) + numBuckets) % numBuckets
   }
 
-  private def writeTo(b: Int, row: InternalRow): Unit = {
-    val acc = open.getOrElseUpdate(b, {
-      val dir = java.nio.file.Paths.get(outDir, s"bucket=$b")
-      java.nio.file.Files.createDirectories(dir)
-      val path = dir.resolve(f"part-$b%05d-p$partitionId-t$taskId.parquet").toString
-      new FileAcc(writers.open(path, partitionId, taskId), tConvI, tTurnI, tTsI)
-    })
-    val p = project(row)
-    acc.track(p)
-    acc.w.write(p)
-  }
+  private def writeTo(b: Int, row: InternalRow): Unit =
+    open.getOrElseUpdate(b, writer.open(b)).write(project(row))
 
   override def commit(): WriterCommitMessage = {
-    val files = open.toSeq.sortBy(_._1).map { case (b, acc) =>
-      acc.w.close()
-      ReplaceFile(b, acc.w.path(),
-        java.nio.file.Files.size(java.nio.file.Paths.get(acc.w.path())),
-        acc.rows, acc.range)
-    }
+    val files = open.toSeq.sortBy(_._1).map(_._2.close())
     open.clear()
     LakeReplaceMessage(files)
   }
 
   override def abort(): Unit = {
-    open.values.foreach { acc =>
-      try acc.w.close() catch { case _: Exception => () }
-      try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(acc.w.path()))
-      catch { case _: Exception => () }
-    }
+    open.values.foreach(_.abort())
     open.clear()
   }
 

@@ -87,23 +87,18 @@ private[table] final class LakeStreamingWrite(
     else StructType(s.fields :+ org.apache.spark.sql.types.StructField(
       "op", org.apache.spark.sql.types.StringType, nullable = false))
 
-  override def createStreamingWriterFactory(pInfo: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    java.nio.file.Files.createDirectories(runDir)
+  override def createStreamingWriterFactory(pInfo: PhysicalWriteInfo): StreamingDataWriterFactory =
     new LakeStreamWriterFactory(
       WriteBridge.parquetWriterFactory(SparkSession.active, fileSchema),
       info.schema(), fileSchema, table.numBuckets, runDir.toString)
-  }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val entries = messages.flatMap(_.asInstanceOf[LakeReplaceMessage].files)
+    val entries = messages.toSeq.flatMap(_.asInstanceOf[LakeReplaceMessage].files)
     // epoch delta files carry their key bounds (tracked in the task writer)
     // — sink-written deltas are skippable by point lookups like every other
     // delta, at zero added I/O
-    val newFiles: Map[Int, Seq[FileEntry]] = entries.groupBy(_.bucket)
-      .view.mapValues(_.map(e => FileEntry(e.path, e.bytes, e.stats))
-        .toSeq.sortBy(_.path)).toMap
-    val newRows: Map[Int, Long] = entries.groupBy(_.bucket)
-      .view.mapValues(_.map(_.rows).sum).toMap
+    val newFiles = BucketFile.entries(entries)
+    val newRows = BucketFile.rows(entries)
     def dropStaged(): Unit = newFiles.values.flatten.foreach { f =>
       try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.path))
       catch { case _: Exception => () }
@@ -168,6 +163,6 @@ private final class LakeStreamWriterFactory(
     runDir: String) extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new LakeBucketDataWriter(writers, inputSchema, tableSchema, numBuckets,
-      s"$runDir/e$epochId", partitionId, taskId)
+    new LakeBucketDataWriter(new BucketWriter(writers, s"$runDir/e$epochId"),
+      inputSchema, tableSchema, numBuckets)
 }

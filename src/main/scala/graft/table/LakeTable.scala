@@ -137,14 +137,13 @@ object ConvBloom {
 /** Key statistics of one data file's rows — the file-skipping input
   * (Iceberg's per-file column bounds, for the table's two key columns, plus
   * a conv_id bloom — see [[ConvBloom]] for why bounds alone cannot prune a
-  * hash-bucketed layout). Written by the hot apply paths from their existing
-  * per-partition write accumulators (NO footer reads added), so every COW /
-  * MOR / streaming-sink / SQL-write file carries its stats for free; files
-  * from stat-less paths (cold start, compaction) simply have none and are
-  * never skipped.
+  * hash-bucketed layout). Tracked by the task that writes the file
+  * ([[FileStatsTracker]], NO footer reads), so every data file the engine
+  * writes carries its stats for free; only files of legacy manifests lack
+  * them, and those are never skipped.
   *
   * Range comparisons are in UTF8 BYTE order (`UTF8String.compareTo`,
-  * unsigned bytes) — the same ordering the accumulators used to compute
+  * unsigned bytes) — the same ordering the tracker uses to compute
   * min/max, so pruning is exact for any conv_id content, ASCII or not.
   * The bloom rides as `ArraySeq[Long]` (value equality, unboxed backing).
   */
@@ -173,7 +172,7 @@ final case class FileStats(minConv: String, maxConv: String, minTurn: Int, maxTu
   /** Event-time window admission for time-scoped analytics (retention /
     * sessionization over recent days, change-window scans): bounds are over
     * the WRITTEN rows' `ts` in Catalyst micros (null ts excluded by widening
-    * to always-admit at the write site — see the accumulators). A file
+    * to always-admit at the write site — see [[FileStatsTracker]]). A file
     * without ts bounds (legacy manifest, stat-less path) always admits —
     * skipping needs positive absence evidence, never its absence.
     */
@@ -805,20 +804,6 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     target.toString
   }
 
-  /** Attach per-bucket key bounds (from a write-side accumulator) to the
-    * bucket's files — every file of the bucket gets the bucket-commit's
-    * union range, which is SOUND for skipping (a file's true range is within
-    * it) and exact in the common one-file-per-bucket-per-commit layout.
-    */
-  def attachStats(files: Map[Int, Seq[FileEntry]],
-      ranges: Map[Int, FileStats]): Map[Int, Seq[FileEntry]] =
-    files.map { case (b, fs) =>
-      b -> (ranges.get(b) match {
-        case Some(st) => fs.map(_.copy(stats = Some(st)))
-        case None => fs
-      })
-    }
-
   /** Manifests are immutable once published, so a driver-side cache makes
     * re-resolution (once per micro-batch on a streaming driver) free. Bounded
     * by a crude clear-on-overflow: entries are small and the live manifest
@@ -940,19 +925,6 @@ final class LakeTable(val root: String, val numBuckets: Int) {
   def attemptDir(version: Long, writerId: String, batchId: Long): Path =
     dataDir.resolve(
       s"c$version-$writerId-$batchId-${java.util.UUID.randomUUID().toString.take(8)}")
-
-  def listBucketFiles(dir: Path): Map[Int, Seq[FileEntry]] = {
-    if (!Files.isDirectory(dir)) return Map.empty
-    LakeTable.listing(Files.list(dir)) {
-      _.filter(_.getFileName.toString.startsWith("bucket=")).toSeq
-    }.map { bdir =>
-      val b = bdir.getFileName.toString.stripPrefix("bucket=").toInt
-      val fs = LakeTable.listing(Files.list(bdir)) {
-        _.filter(_.toString.endsWith(".parquet")).toSeq
-      }.sortBy(_.toString).map(p => FileEntry(p.toString, Files.size(p)))
-      b -> fs
-    }.toMap
-  }
 
   /** Read the table rows (including tombstones) at the current snapshot,
     * optionally restricted to a set of buckets (file pruning — the physical
@@ -1296,21 +1268,10 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     deleted
   }
 
-  /** Sum parquet footer row counts — no Spark job, no data read. Footer
-    * opens are parallelized: they are driver-side serial time otherwise,
-    * which caps strong scaling (Amdahl) once the distributed phases shrink.
-    */
-  def footerRowCount(files: Seq[String]): Long = {
-    import org.apache.hadoop.conf.Configuration
-    import scala.collection.parallel.CollectionConverters._
-    val conf = new Configuration()
-    files.par.map(footerCount(_, conf)).sum
-  }
-
-  /** Per-bucket footer row counts in ONE parallel pass sharing ONE Hadoop
-    * Configuration. Building a Configuration per bucket (XML resource load,
-    * ~20 ms) made commit metadata cost O(buckets × 20 ms) of driver serial
-    * time per micro-batch — measured ~0.6 s of the ~3 s tail batch.
+  /** Per-bucket parquet footer row counts in ONE parallel pass sharing ONE
+    * Hadoop Configuration — no Spark job, no data read. Commits take their
+    * row lineage from the writers; this is the independent reading of what
+    * actually landed in the files, the reference specs check it against.
     */
   def footerRowCounts(byBucket: Map[Int, Seq[FileEntry]]): Map[Int, Long] = {
     import org.apache.hadoop.conf.Configuration

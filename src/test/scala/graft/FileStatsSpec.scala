@@ -47,9 +47,9 @@ class FileStatsSpec extends SparkSpecBase {
 
   test("COW merge commits carry the written bucket's key bounds") {
     val t = new LakeTable(tmpDir("fs-cow"), numBuckets = 2)
-    // cold start files legitimately have no bounds (no accumulator pass)
+    // cold start files carry the bounds their writers tracked, like every write
     MergeApplier.applyBatch(spark, t, spark.createDataset(batch("a", 3, 0)).toDF(), "w", 0L)
-    assert(allEntries(t).forall(_.stats.isEmpty))
+    assert(allEntries(t).forall(_.stats.nonEmpty))
     // the hot COW merge attaches the fold's winner bounds
     MergeApplier.applyBatch(spark, t, spark.createDataset(batch("b", 3, 100)).toDF(), "w", 1L)
     val entries = allEntries(t)
