@@ -4,7 +4,7 @@ import graft.changelog.Changelog
 import graft.functions.{Grel, Rml, Text}
 import graft.multimodal.Multimodal
 import graft.operators.{AnnIndex, ChangeFeed, Dedup, IncrementalAgg, Lww, MergeApplier, Similarity}
-import graft.streaming.{AnnMaintenance, Replicate}
+import graft.streaming.{AnnMaintenance, LocalCheckpointFileManager, Replicate}
 import graft.table.LakeTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -167,6 +167,7 @@ object SparkEntry {
   private def runAvailableNowToParquet(sdf: DataFrame, outDir: String,
       ckpt: String): Unit = {
     val s = sdf.sparkSession
+    LocalCheckpointFileManager.install(s)
     withStatePartitions(s, statePartitions(s)) {
       val q = sdf.writeStream.format("parquet")
         .option("path", outDir)

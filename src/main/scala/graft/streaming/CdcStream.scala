@@ -29,6 +29,13 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
   * This asymmetry is exactly what makes a LOST checkpoint safe: re-tailing
   * the same source with the same writerId dedupes instead of double-applying
   * (StreamSpec "lost checkpoint"; LifecycleSpec pins the mode-switch case).
+  *
+  * Checkpoint logs commit through [[LocalCheckpointFileManager]]: `start`
+  * installs it only when neither the session nor the SparkContext's Hadoop
+  * conf names a checkpoint manager (a caller's choice always wins). Once
+  * installed it stays set for the session, so the caller's own streams
+  * started later use it too. Checkpoints on any scheme but `file:` go
+  * through Spark's own manager unchanged.
   */
 object CdcStream {
 
@@ -74,6 +81,7 @@ object CdcStream {
       case "mor" => MergeApplier.applyBatchMor(spark, table, _, writerId, _)
       case other => throw new IllegalArgumentException(s"unknown mode: $other")
     }
+    LocalCheckpointFileManager.install(spark)
     source(spark, sourceDir, schema, maxFilesPerTrigger)
       .writeStream
       .queryName(s"cdc-tail-$writerId")

@@ -1,16 +1,16 @@
 package graft.table
 
 import graft.model.Model
+import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.graftbridge.WriteBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 /** One data file a task wrote: bucket, path, byte size, row and tombstone
   * counts, and the written rows' [[FileStats]]. Commits build their manifest
@@ -94,14 +94,18 @@ final class FileStatsTracker(schema: StructType, textIndex: Boolean) {
   * [[FileStatsTracker]] observes them, and hands back a [[BucketFile]].
   * File names carry the partition and the task attempt, so a retried or
   * speculative attempt never collides with a file an earlier one left.
+  * Directory, file and its `.crc` sidecar are created through java.nio
+  * ([[ChecksummedFile]]), not Hadoop's local file system: without the native
+  * `libhadoop` that one forks a `chmod` process for each of the three.
   */
 final class BucketWriter(writers: WriteBridge.TaskWriterFactory, dir: String,
     textIndex: Boolean = false) extends Serializable {
 
   def open(bucket: Int): BucketWriter.OpenFile = {
     val tc = TaskContext.get()
-    val path = f"$dir/bucket=$bucket/part-$bucket%05d-p${tc.partitionId()}-t${tc.taskAttemptId()}.parquet"
-    new BucketWriter.OpenFile(bucket, writers.open(path),
+    val path = Paths.get(
+      f"$dir/bucket=$bucket/part-$bucket%05d-p${tc.partitionId()}-t${tc.taskAttemptId()}.parquet")
+    new BucketWriter.OpenFile(bucket, path, writers.open(path),
       new FileStatsTracker(writers.schema, textIndex))
   }
 
@@ -121,24 +125,27 @@ final class BucketWriter(writers: WriteBridge.TaskWriterFactory, dir: String,
 
 object BucketWriter {
 
-  final class OpenFile(bucket: Int, w: OutputWriter, tracker: FileStatsTracker) {
+  final class OpenFile(bucket: Int, path: Path, w: ParquetWriter[InternalRow],
+      tracker: FileStatsTracker) {
     def write(r: InternalRow): Unit = { tracker.observe(r); w.write(r) }
 
     def close(): BucketFile = {
       w.close()
-      val bytes = Files.size(Paths.get(w.path()))
+      val bytes = Files.size(path)
       WriteBridge.reportOutput(bytes, tracker.rows)
-      BucketFile(bucket, w.path(), bytes, tracker.rows, tracker.tombstones, tracker.stats)
+      BucketFile(bucket, path.toString, bytes, tracker.rows, tracker.tombstones, tracker.stats)
     }
 
     /** Best effort: a file that survives is an unreferenced orphan. */
     def abort(): Unit = {
       try w.close() catch { case _: Exception => () }
-      try Files.deleteIfExists(Paths.get(w.path())) catch { case _: Exception => () }
+      Seq(path, ChecksummedFile.sidecar(path)).foreach { p =>
+        try Files.deleteIfExists(p) catch { case _: Exception => () }
+      }
     }
   }
 
-  def apply(spark: SparkSession, schema: StructType, dir: java.nio.file.Path,
+  def apply(spark: SparkSession, schema: StructType, dir: Path,
       textIndex: Boolean = false): BucketWriter =
     new BucketWriter(WriteBridge.parquetWriterFactory(spark, schema), dir.toString, textIndex)
 
@@ -147,7 +154,7 @@ object BucketWriter {
     * back through `collect()`.
     */
   def writeAligned(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType,
-      dir: java.nio.file.Path, textIndex: Boolean = false): Seq[BucketFile] = {
+      dir: Path, textIndex: Boolean = false): Seq[BucketFile] = {
     val w = BucketWriter(spark, schema, dir, textIndex)
     rdd.mapPartitions(rows => w.write(TaskContext.getPartitionId(), rows).iterator)
       .collect().toSeq

@@ -1232,11 +1232,13 @@ final class LakeTable(val root: String, val numBuckets: Int) {
         try readManifest(r.manifest).values.flatten.map(_.path)
         catch { case _: Exception => Seq.empty }
       }
+    // a `.crc` sidecar lives and dies with the data file it checks
+    def live(p: Path): Boolean = referenced.contains(p.toString) ||
+      ChecksummedFile.checkedBy(p).exists(f => referenced.contains(f.toString))
     var deleted = 0
     if (Files.isDirectory(dataDir)) {
       walkTolerant(dataDir).reverse.foreach { p =>
-        if (Files.isRegularFile(p) && !referenced.contains(p.toString) &&
-            expendable(p)) {
+        if (Files.isRegularFile(p) && !live(p) && expendable(p)) {
           // deleteIfExists: between the expendable() check and here a
           // concurrent vacuum (or a crashed writer's own cleanup) can have
           // removed the file — a NoSuchFileException must not abort the
